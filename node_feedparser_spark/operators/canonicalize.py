@@ -9,27 +9,55 @@ is partly *built by the job*:
      must match the spec exactly, so it shares the same Python function),
   2. static alias dictionary via **broadcast hash join** (tiny dim table —
      SURVEY.md J1; Catalyst broadcasts it, no shuffle),
-  3. fuzzy candidate pairs via **MinHash-LSH banding**, DataFrame-native:
-     explode 3-gram shingles -> 64 seeded xxhash64 min-aggregations ->
-     band hashes -> self-join on (band_idx, band_hash).  O(n) shuffle,
-     never O(n^2): pairwise work happens only inside LSH buckets,
-  4. exact Jaccard verification of candidates (vectorized UDF) at
-     FUZZY_JACCARD — LSH may over-generate (false positives at low s are
-     filtered here) but under-generates with probability < 1e-5 at s>=0.55
-     with 32 bands x 2 rows,
-  5. connected components over (exact-key ∪ fuzzy) edges assigns
-     entity_id = min(sha1-hash of member keys) — see components.py.
+  3. fuzzy pairs among the distinct MENTION keys (3-gram Jaccard >=
+     FUZZY_JACCARD), hybrid on vocabulary size like connected_components:
+     one bounded Arrow collect (limit DRIVER_FUZZY_KEYS + 1) decides.
+     - fits: an exact shingle inverted index with prefix filtering on the
+       driver (fuzzy_pairs — the oracle's pairs by construction) and a
+       union-find; the labels return as a broadcast local relation.  At
+       this size a distributed plan is ~all per-stage fixed cost;
+     - does not fit: **MinHash-LSH banding**, DataFrame-native: explode
+       3-gram shingles -> 64 seeded xxhash64 min-aggregations -> band
+       hashes -> self-join on (band_idx, band_hash) (O(n) shuffle; pairwise
+       work only inside LSH buckets), exact Jaccard verification of the
+       candidates (LSH under-generates with probability < 1e-5 at s>=0.55
+       with 32 bands x 2 rows), then connected_components,
+  4. labels (node = sha1-hash of the key, component = min node) join every
+     surface on node_id: entity_id = coalesce(component, node_id) in ONE
+     table, mapped(surface, entity_id, n_mentions).  mapping projects it;
+     vertices is one map-side-combinable groupBy over it.
 
-Pseudo-entities ('conv:…', 'tool:…') merge by exact key ONLY (step 3 skips
-them): fuzzy-merging conversation IDs would collapse distinct conversations.
+Pseudo-entities ('conv:…', 'tool:…') merge by exact key ONLY: their keys
+never enter step 3 (fuzzy-merging conversation IDs would collapse distinct
+conversations).  A pseudo key equal to a mention key has that key's
+node_id, so it joins the key's component exactly as in the oracle, where
+both hang off one key node.
+
+DRIVER_FUZZY_KEYS was set by timing map_surfaces (cached) + a count of it
+and of entity_vertices, warm, median of 2, with each path forced, on
+entity_heavy-style vocabularies (kgbench entity_groups: 3 surfaces and 2
+keys per group, plus 1 pseudo surface per 6 groups), local[4], 4-core VM:
+
+    distinct keys   driver path   LSH + CC path   fuzzy_pairs alone
+        2,400          2.7 s          11.5 s            0.09 s
+       10,000          2.9 s          49.3 s            0.7 s
+       20,000          6.8 s         155.6 s            5.0 s
+
+The driver path wins at every size measured, but fuzzy_pairs grows about
+quadratically on these vocabularies (their shingles come from a small
+syllable set), so the bound is the largest size measured, 20k, not a
+crossover; raising it needs measurements past 20k.
 
 Scale notes: distinct surface forms ≪ total mentions (counts aggregate
-first); every join key is a 64-bit hash or short string; the only wide
-shuffle is the shingle explode, bounded by Σ|key| per partition.  AQE handles
-residual skew (hot shingles like ' th').
+first); every join key is a 64-bit hash or short string; past the bound
+the only wide shuffle is the shingle explode, bounded by Σ|key| per
+partition.  AQE handles residual skew (hot shingles like ' th').
 """
 
 from __future__ import annotations
+
+import math
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -38,12 +66,15 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..constants import ALIAS_TABLE
-from ..functions.normalize import normalize_entity_key
+from ..functions.normalize import char_shingles, entity_hash, normalize_entity_key
 from ..reference_extract import FUZZY_JACCARD
-from .components import connected_components
+from .components import connected_components, union_find_labels
 
 N_MINHASH = 64
 N_BANDS = 32  # rows per band = N_MINHASH // N_BANDS = 2
+#: distinct non-pseudo keys up to which fuzzy_labels runs on the driver
+#: (bound table in the module docstring)
+DRIVER_FUZZY_KEYS = 20_000
 
 
 @pandas_udf(T.StringType())
@@ -166,46 +197,106 @@ def lsh_candidate_pairs(keys: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(spark: SparkSession, surfaces: DataFrame):
-    """surfaces(surface, n_mentions) -> (mapping, vertices).
+def fuzzy_pairs(keys: list[str]) -> list[tuple[str, str]]:
+    """Every pair of distinct keys with 3-gram Jaccard >= FUZZY_JACCARD,
+    exactly the pairs reference_extract.canonicalize_entities merges, found
+    with a shingle inverted index and prefix filtering (AllPairs).
 
-    mapping:  (surface, entity_id)
-    vertices: (entity_id, canonical_name, aliases, n_mentions) — canonical
-              name = most-mentioned surface, ties lexicographic
-              (matches the pure-Python spec).
+    Shingles are ranked rarest first; a key indexes and probes only its
+    prefix, the first |x| - ceil(t|x|) + 1 ranks.  Two sets with Jaccard
+    >= t share at least ceil(t * max(|x|, |y|)) shingles, so their prefixes
+    share one: every qualifying pair is a candidate.  Keys are visited in
+    ascending set size, and a probe skips indexed keys smaller than t|x|
+    (Jaccard <= |y|/|x|), trimming each posting list from the front.  Each
+    candidate is verified with the reference's own float expression, so
+    the result is exact, not an estimate.  The 1e-9 slack only lengthens
+    prefixes, guarding ceil() against float rounding of t*|x|."""
+    t = FUZZY_JACCARD
+    sets = [char_shingles(k) for k in keys]
+    freq = Counter(g for s in sets for g in s)
+    rank = {g: r for r, g in enumerate(sorted(freq, key=lambda g: (freq[g], g)))}
+    ranked = [sorted(rank[g] for g in s) for s in sets]
+    postings: dict[int, list[int]] = {}
+    start: dict[int, int] = {}
+    pairs = []
+    for i in sorted(range(len(keys)), key=lambda i: len(sets[i])):
+        a = sets[i]
+        min_size = t * len(a) - 1e-9
+        candidates: set[int] = set()
+        for g in ranked[i][: len(a) - math.ceil(min_size) + 1]:
+            post = postings.setdefault(g, [])
+            lo = start.get(g, 0)
+            while lo < len(post) and len(sets[post[lo]]) < min_size:
+                lo += 1
+            start[g] = lo
+            candidates.update(post[lo:])
+            post.append(i)
+        for j in candidates:
+            b = sets[j]
+            inter = len(a & b)
+            if inter / (len(a) + len(b) - inter) >= t:
+                pairs.append((keys[j], keys[i]))
+    return pairs
 
-    Execution split: pseudo-entities ('conv:', 'tool:') merge by EXACT key
-    only, so they take a fast path — one groupBy(key), entity_id =
-    hash(key), no LSH / CC / label joins.  At corpus scale pseudo surfaces
-    outnumber mention surfaces ~1000:1 (one per conversation), so this
-    removes almost all data from the expensive path without changing one
-    label.  The single subtlety: a pseudo surface whose key COLLIDES with a
-    mention key could be pulled into a fuzzy-merged component, so colliding
-    keys are routed to the full path (the overlap is computed exactly and
-    is ~always empty).
-    """
-    keyed = surface_keys(spark, surfaces)  # surface, key, n_mentions, is_pseudo
-    keyed.cache()
 
-    mention_keyed = keyed.filter(~F.col("is_pseudo"))
-    pseudo_keyed = keyed.filter(F.col("is_pseudo"))
-    overlap = (
-        pseudo_keyed.select("key")
-        .distinct()
-        .join(mention_keyed.select("key").distinct(), "key")
+def fuzzy_labels(spark: SparkSession, fuzzy_keys: DataFrame) -> DataFrame:
+    """fuzzy_keys(key) [distinct, non-pseudo] -> labels(node, component),
+    node = entity_hash(key), component = min node of its fuzzy component;
+    keys in no pair are absent.
+
+    Hybrid, like connected_components: one bounded Arrow collect decides.
+    Up to DRIVER_FUZZY_KEYS keys, fuzzy_pairs + union-find run on the
+    driver and the labels come back as a broadcastable local relation;
+    past it, the distributed LSH -> Jaccard verify -> connected_components
+    path runs.  Both return identical labels (pinned by tests)."""
+    keys = fuzzy_keys.limit(DRIVER_FUZZY_KEYS + 1).toPandas()["key"].tolist()
+    if len(keys) <= DRIVER_FUZZY_KEYS:
+        labels = union_find_labels(
+            (entity_hash(a), entity_hash(b)) for a, b in fuzzy_pairs(keys)
+        )
+        return F.broadcast(
+            spark.createDataFrame(labels, "node long, component long")
+        )
+    verified = lsh_candidate_pairs(fuzzy_keys).filter(
+        jaccard_col("key_a", "key_b") >= F.lit(FUZZY_JACCARD)
     )
-    full_keyed = mention_keyed.unionByName(
-        pseudo_keyed.join(F.broadcast(overlap), "key")
+    return connected_components(
+        verified.select(
+            entity_hash_col("key_a").alias("src"),
+            entity_hash_col("key_b").alias("dst"),
+        )
     )
-    fast_keyed = pseudo_keyed.join(F.broadcast(overlap), "key", "left_anti")
 
-    fast_mapping = fast_keyed.select(
-        "surface", entity_hash_col("key").alias("entity_id")
+
+def map_surfaces(spark: SparkSession, surfaces: DataFrame) -> DataFrame:
+    """surfaces(surface, n_mentions) -> mapped(surface, entity_id,
+    n_mentions), uncached: the one table mapping and vertices project.
+
+    node_id = entity_hash(key), so a pseudo surface whose key equals a
+    mention key shares that key's node and picks up its fuzzy component
+    from the same label join — no separate pseudo or overlap path.  Every
+    other node is its own entity (coalesce)."""
+    keyed = surface_keys(spark, surfaces).withColumn(
+        "node_id", entity_hash_col("key")
     )
-    # canonical_name via one ordered-struct min: (-n_mentions asc, surface
-    # asc) == (count desc, name asc) — no window, map-side combinable
-    fast_vertices = (
-        fast_keyed.groupBy("key")
+    labels = fuzzy_labels(
+        spark, keyed.filter(~F.col("is_pseudo")).select("key").distinct()
+    )
+    return keyed.join(labels, keyed.node_id == labels.node, "left").select(
+        "surface",
+        F.coalesce("component", "node_id").alias("entity_id"),
+        "n_mentions",
+    )
+
+
+def entity_vertices(mapped: DataFrame) -> DataFrame:
+    """mapped(surface, entity_id, n_mentions) -> vertices(entity_id,
+    canonical_name, aliases, n_mentions) in one map-side-combinable
+    groupBy: canonical_name is the min of (-n_mentions, surface), i.e.
+    most-mentioned surface, ties lexicographic — the spec's (count desc,
+    name asc)."""
+    return (
+        mapped.groupBy("entity_id")
         .agg(
             F.min(
                 F.struct(
@@ -217,77 +308,24 @@ def canonicalize(spark: SparkSession, surfaces: DataFrame):
             F.sum("n_mentions").alias("n_mentions"),
         )
         .select(
-            entity_hash_col("key").alias("entity_id"),
+            "entity_id",
             F.col("best.s").alias("canonical_name"),
             "aliases",
             "n_mentions",
         )
     )
 
-    full_mapping, full_vertices = _canonicalize_full(full_keyed)
-    mapping = full_mapping.unionByName(fast_mapping)
-    vertices = full_vertices.unionByName(fast_vertices)
-    return mapping, vertices
 
+def canonicalize(spark: SparkSession, surfaces: DataFrame):
+    """surfaces(surface, n_mentions) -> (mapping, vertices).
 
-def _canonicalize_full(keyed: DataFrame):
-    """The LSH + connected-components path (mention surfaces + colliding
-    pseudo keys): see module docstring steps 3-5."""
-    distinct_keys = keyed.select("key", "is_pseudo").distinct()
-    node_ids = distinct_keys.withColumn("node_id", entity_hash_col("key")).cache()
+    mapping:  (surface, entity_id)
+    vertices: (entity_id, canonical_name, aliases, n_mentions) — canonical
+              name = most-mentioned surface, ties lexicographic
+              (matches the pure-Python spec).
 
-    fuzzy_keys = node_ids.filter(~F.col("is_pseudo")).select("key")
-    pairs = lsh_candidate_pairs(fuzzy_keys)
-    verified = pairs.filter(jaccard_col("key_a", "key_b") >= F.lit(FUZZY_JACCARD))
-
-    ids = node_ids.select("key", "node_id")
-    edge_ids = (
-        verified.join(ids.withColumnRenamed("key", "key_a"), "key_a")
-        .withColumnRenamed("node_id", "src")
-        .join(
-            ids.withColumnRenamed("key", "key_b").withColumnRenamed(
-                "node_id", "dst"
-            ),
-            "key_b",
-        )
-        .select("src", "dst")
-    )
-
-    labels = connected_components(edge_ids)  # (node_id, component)
-
-    key_component = (
-        node_ids.join(labels, node_ids.node_id == labels.node, "left")
-        .select(
-            "key",
-            F.coalesce("component", "node_id").alias("entity_id"),
-        )
-    )
-
-    mapped = keyed.join(key_component, "key").select(
-        "surface", "key", "entity_id", "n_mentions"
-    )
-    mapping = mapped.select("surface", "entity_id")
-
-    # canonical_name = most-mentioned surface, ties lexicographic asc —
-    # exactly the spec's (count desc, name asc); row_number over a window
-    # (deterministic, unlike max_by with composite string tiebreaks).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("entity_id").orderBy(
-        F.col("n_mentions").desc(), F.col("surface").asc()
-    )
-    best = (
-        mapped.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("entity_id", F.col("surface").alias("canonical_name"))
-    )
-    vertices = (
-        mapped.groupBy("entity_id")
-        .agg(
-            F.sort_array(F.collect_set("surface")).alias("aliases"),
-            F.sum("n_mentions").alias("n_mentions"),
-        )
-        .join(best, "entity_id")
-        .select("entity_id", "canonical_name", "aliases", "n_mentions")
-    )
-    return mapping, vertices
+    Both project map_surfaces' table, which nothing here caches: a caller
+    that reads both (build_kg) caches map_surfaces' result itself and
+    releases it."""
+    mapped = map_surfaces(spark, surfaces)
+    return mapped.select("surface", "entity_id"), entity_vertices(mapped)

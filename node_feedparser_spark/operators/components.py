@@ -59,13 +59,10 @@ def _small_star(e: DataFrame) -> DataFrame:
     return moved.union(self_edges)
 
 
-def _local_cc(e: DataFrame) -> DataFrame:
-    """Driver-side union-find for small edge sets.  Identical contract to
-    the distributed loop (component = min member id); used below the size
-    cutoff where a distributed iteration would spend 10x the work in stage
-    scheduling.  A 1000-executor cluster deduping a 10^12-turn corpus still
-    ends up here whenever the distinct-alias graph is modest — the cutoff,
-    not the cluster, decides."""
+def union_find_labels(pairs) -> "pd.DataFrame":
+    """(u, v) node-id pairs -> pandas (node, component) for every node in
+    some pair, component = min member id: the driver-side union-find both
+    _local_cc and canonicalize's driver path run."""
     import pandas as pd
 
     parent: dict[int, int] = {}
@@ -76,13 +73,7 @@ def _local_cc(e: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    # Arrow in BOTH directions: toPandas() streams the edge list as Arrow
-    # batches and the result goes back as one pandas frame (arrow-enabled
-    # createDataFrame) — at the 1M-edge cutoff this moves ~2M (node,
-    # component) rows in a handful of Arrow buffers instead of ~2M pickled
-    # Py4J tuples (measured ~8x on the round-trip).
-    pdf = e.toPandas()
-    for u, v in zip(pdf["u"], pdf["v"]):
+    for u, v in pairs:
         u, v = int(u), int(v)
         parent.setdefault(u, u)
         parent.setdefault(v, v)
@@ -91,13 +82,30 @@ def _local_cc(e: DataFrame) -> DataFrame:
             # union by min so the root IS the component label
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    out = pd.DataFrame(
+    return pd.DataFrame(
         {
-            "node": list(parent.keys()),
-            "component": [find(n) for n in parent],
+            "node": pd.Series(list(parent), dtype="int64"),
+            "component": pd.Series([find(n) for n in parent], dtype="int64"),
         }
     )
-    return e.sparkSession.createDataFrame(out, "node long, component long")
+
+
+def _local_cc(e: DataFrame) -> DataFrame:
+    """Driver-side union-find for small edge sets.  Identical contract to
+    the distributed loop (component = min member id); used below the size
+    cutoff where a distributed iteration would spend 10x the work in stage
+    scheduling.  A 1000-executor cluster deduping a 10^12-turn corpus still
+    ends up here whenever the distinct-alias graph is modest — the cutoff,
+    not the cluster, decides."""
+    # Arrow in BOTH directions: toPandas() streams the edge list as Arrow
+    # batches and the result goes back as one pandas frame (arrow-enabled
+    # createDataFrame) — at the 1M-edge cutoff this moves ~2M (node,
+    # component) rows in a handful of Arrow buffers instead of ~2M pickled
+    # Py4J tuples (measured ~8x on the round-trip).
+    pdf = e.toPandas()
+    return e.sparkSession.createDataFrame(
+        union_find_labels(zip(pdf["u"], pdf["v"])), "node long, component long"
+    )
 
 
 def connected_components(

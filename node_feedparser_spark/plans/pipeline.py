@@ -1,8 +1,9 @@
 """build_kg — the flagship end-to-end plan.
 
 transcripts -> dedupe(first-wins) -> extract(mapInPandas) -> canonicalize
-(broadcast alias join + MinHash-LSH + connected components) -> triples /
-vertices / edges / metrics, with per-bucket lineage and resume.
+(broadcast alias join + fuzzy merge: driver-side exact similarity join for
+small vocabularies, MinHash-LSH + connected components past the bound) ->
+triples / vertices / edges / metrics, with per-bucket lineage and resume.
 
 The four outputs are the analogs of the reference's item records, meta
 record, and errors side channel (SURVEY.md §1.3); 'meta before items'
@@ -24,7 +25,9 @@ Scale design:
   old second shuffle was the measured write-phase scaling residual).
 - resume: committed (snapshot_id, bucket) pairs read from the metrics table
   are anti-joined away from the input — a restart recomputes only missing
-  buckets (reference analog: checkpointed incremental emission).
+  buckets (reference analog: checkpointed incremental emission).  Every
+  bucket a run covers gets a metrics row, zero counts for one the input
+  leaves empty, so metrics and graph_state always name the same hashes.
 - triples are written with DYNAMIC partition overwrite on (snap, bucket)
   (round 3): recomputing an uncommitted bucket after a crash REPLACES its
   partition instead of appending a duplicate — the write is idempotent per
@@ -57,7 +60,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.canonicalize import canonicalize
+from ..operators.canonicalize import entity_vertices, map_surfaces
 from ..operators.extract import (
     ERROR_PRED,
     MAX_TEXT_BYTES,
@@ -640,6 +643,7 @@ def build_kg(
     turn_counts = raw.groupBy("bucket").agg(
         F.count_distinct(F.struct("conv_id", "turn_idx")).alias("n_turns")
     )
+    run_buckets = [b for b in range(n_buckets) if b not in set(skipped)]
 
     phases: dict[str, float] = {}
     extracted = _bucketed(
@@ -658,11 +662,13 @@ def build_kg(
         .groupBy("surface")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
-    # canonicalize() materializes extraction eagerly (the connected-
-    # components edge set is localCheckpoint'ed), so time it as a phase
+    # map_surfaces() materializes extraction eagerly (its bounded collect
+    # of the distinct mention keys decides the fuzzy path), so time it as a
+    # phase.  mapping and vertices both project the one cached table.
     t0 = time.monotonic()
-    mapping, vertices = canonicalize(spark, surfaces)
-    mapping.cache()
+    mapped = map_surfaces(spark, surfaces).cache()
+    mapping = mapped.select("surface", "entity_id")
+    vertices = entity_vertices(mapped)
     phases["extract_canonicalize"] = round(time.monotonic() - t0, 2)
 
     m_subj = mapping.withColumnRenamed("surface", "subj").withColumnRenamed(
@@ -675,9 +681,9 @@ def build_kg(
     # surfaces ≪ mentions, so the surface->entity mapping usually fits a
     # broadcast (no shuffle/sort of the full triple set, measured 2x on the
     # join+write path).  The gate is an ESTIMATED BYTE size, not a row
-    # count: one agg job over the cached mapping yields (rows, total
-    # surface bytes); the in-memory hash relation costs roughly
-    # string bytes + ~48 B/row of object+hash overhead.  Broadcasting is
+    # count: one agg job over the cached table (which materializes it)
+    # yields (rows, total surface bytes); the in-memory hash relation costs
+    # roughly string bytes + ~48 B/row of object+hash overhead.  Broadcasting is
     # forced only under 64 MB estimated — far below executor budgets even
     # with the 2x hint (subj + obj).  Past the gate we do NOT hint and let
     # AQE convert the join at runtime if the post-shuffle size qualifies;
@@ -750,8 +756,13 @@ def build_kg(
         )
     )
     err_counts = errors.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_errors"))
+    # one row per bucket the run covers, also for a bucket the input leaves
+    # empty: graph_state records every run bucket's hash, and validate_kg
+    # requires metrics to name the same set
+    covered = spark.createDataFrame([(b,) for b in run_buckets], "bucket int")
     metrics = (
-        turn_counts.join(hist, "bucket", "left")
+        covered.join(turn_counts, "bucket", "left")
+        .join(hist, "bucket", "left")
         .join(err_counts, "bucket", "left")
         .select(
             F.lit(run_id).alias("run_id"),
@@ -760,7 +771,7 @@ def build_kg(
             ),
             F.lit(snap).alias("snapshot_id"),
             F.col("bucket"),
-            F.col("n_turns"),
+            F.coalesce("n_turns", F.lit(0)).alias("n_turns"),
             F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
             F.coalesce("n_errors", F.lit(0)).alias("n_errors"),
             F.coalesce(
@@ -819,7 +830,6 @@ def build_kg(
     #   of this snapshot on a partial resume, or a previous snapshot on a
     #   split ingest) -> incremental union-merge;
     # - fresh: empty/na state -> plain overwrite.
-    run_buckets = [b for b in range(n_buckets) if b not in set(skipped)]
     run_hashes = {partition_hash(snap, n_buckets, b) for b in run_buckets}
     included = _read_graph_state(output_dir)
     replayed = not run_hashes or run_hashes <= included
@@ -840,7 +850,7 @@ def build_kg(
     #   triples write  — materializes the triples cache (the cache sits
     #                    below the write's repartition, one pass computes
     #                    join + cache + data);
-    #   vertices write — depends ONLY on the cached mapping, so it runs
+    #   vertices write — depends ONLY on the cached mapped table, so it runs
     #                    CONCURRENTLY with the triples write;
     #   edges write    — aggregates the triples cache, so it starts only
     #                    after the triples write populated it (starting
@@ -931,7 +941,7 @@ def build_kg(
     n_triples = int(obs_m.get["n"])
     phases["write_metrics"] = round(time.monotonic() - t0, 2)
     extracted.unpersist()
-    mapping.unpersist()
+    mapped.unpersist()
     triples.unpersist()
     metrics.unpersist()
     summary = {

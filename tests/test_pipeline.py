@@ -11,7 +11,12 @@ from node_feedparser_spark.sources.transcripts import snapshot_id
 
 def test_build_kg_end_to_end(spark, corpus_path, corpus_pdf, tmp_path):
     out = str(tmp_path / "kg")
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet())
     summary = build_kg(spark, corpus_path, out, n_buckets=8)
+    # everything build_kg (or canonicalization inside it) persisted is
+    # released when it returns
+    assert set(jsc.getPersistentRDDs().keySet()) - persisted == set()
     assert summary["n_triples"] > 0
     assert summary["n_vertices"] > 0
     assert summary["n_edges"] > 0

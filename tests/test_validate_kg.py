@@ -142,3 +142,26 @@ def test_shared_alias_fails(spark, kg_copy):
     # sets, so a shared alias is always a real corruption -> fail
     assert by["alias_single_owner"]["status"] == "fail"
     assert not report["ok"] and report["n_fail"] == 1
+
+
+def test_empty_buckets_keep_state_and_metrics_aligned(spark, corpus_pdf, tmp_path):
+    """A fresh build and a merge delta of one conversation each leave most
+    of the 8 buckets empty; every bucket a run covers still gets a metrics
+    row, so graph_state and metrics name the same hashes."""
+    corpus = corpus_pdf.assign(ts=corpus_pdf["ts"].astype("datetime64[us]"))
+    # the corpus schema: one conversation's all-null columns keep their type
+    schema = pa.Table.from_pandas(corpus, preserve_index=False).schema
+    out = str(tmp_path / "kg")
+    for i, conv in enumerate(sorted(corpus["conv_id"].unique())[:2]):
+        p = str(tmp_path / f"one{i}.parquet")
+        one = corpus[corpus["conv_id"] == conv]
+        pq.write_table(
+            pa.Table.from_pandas(one, schema=schema, preserve_index=False), p
+        )
+        build_kg(spark, p, out, n_buckets=8)
+        report = validate_kg(spark, out)
+        assert report["ok"], report
+        assert _by_name(report)["graph_state_matches_metrics"]["status"] == "pass"
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.count() == 16
+    assert metrics.filter("n_turns = 0").count() >= 14
